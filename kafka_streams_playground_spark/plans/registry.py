@@ -41,7 +41,8 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Register a query. The wrapped fn gets a runtime-configured session
-    (UTC session tz, AQE) regardless of who built the SparkSession."""
+    (UTC session tz, AQE, shuffle partitions from the cores unless the
+    session sets them) regardless of who built the SparkSession."""
 
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,9 +11,11 @@ Scale notes (100 TB / 1000-executor design):
 * AQE on — runtime coalescing, skew-join splitting, dynamic join strategy.
 * ``spark.sql.session.timeZone=UTC`` — fixtures store naive timestamps; UTC
   makes ``unix_timestamp``/window bucketing agree with the DuckDB oracle.
-* Shuffle partition count is a knob, not a constant: default 32 for local
-  tests; a real deployment sizes it so a shuffle partition is ~128-200 MB
-  (AQE coalesces down from a deliberately-high initial number).
+* ``spark.sql.shuffle.partitions`` defaults to ``defaultParallelism`` (the
+  cores), not a constant: a stateful stream query fixes its state-partition
+  count from it at checkpoint creation, then pays a task and checkpoint
+  files per partition in every micro-batch. A value set through Spark's own
+  conf (``--conf``, ``spark.conf.set``) is kept: that is the deployment knob.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied to any session (including driver-provided).
+# Runtime-settable confs applied to any session (including driver-provided)
+# on every registered query, so a session cannot override them.
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     # \r stage-progress spam corrupts harnesses that tail-capture stdout
@@ -41,29 +44,27 @@ _RUNTIME_CONF = {
     # watermarks/windows require TimestampType, and UTC keeps epoch math
     # identical to the DuckDB oracle.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    # Driver-built sessions default to 200 shuffle partitions; on local[32]
-    # that costs ~200 state-store tasks per tiny streaming micro-batch. AQE
-    # coalesces batch plans but not streaming state, so pin a sane local
-    # value (env-overridable). A real cluster deployment sizes this to data.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
 }
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
+    """Apply runtime-settable confs to an existing session (idempotent);
+    shuffle partitions only when the session holds no value for them."""
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             # Conf not runtime-settable in this build — leave the default.
             pass
+    key = "spark.sql.shuffle.partitions"
+    if not spark._jsparkSession.sessionState().conf().contains(key):
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
     return spark
 
 
 def get_spark(
     app_name: str = "kafka-streams-playground-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -72,8 +73,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -83,9 +82,5 @@ def get_spark(
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    # Explicit argument wins over the _RUNTIME_CONF default.
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark = builder.getOrCreate()
-    configure_runtime(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return spark
+    return configure_runtime(spark)

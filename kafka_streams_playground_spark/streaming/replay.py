@@ -6,10 +6,15 @@ fixture table through the *streaming* execution path — real micro-batches,
 state stores, watermarks — and ``trigger(availableNow=True)`` drains it to
 completion so tests/oracle checks see the final state (FIXTURES.md §C).
 
-Each fixture table is a single parquet file, so availableNow drains in one
-micro-batch — making update-mode output equal to the complete final state,
-which is what the DuckDB oracle checks. (With Kafka sources the same
-pipelines run continuously; nothing below depends on batch finiteness.)
+A fixture table read by :func:`read_stream_table` is one parquet file and
+drains in one micro-batch; a split feed (:func:`write_split_feed` read back
+by :func:`read_split_stream`) of N segments drains in N micro-batches. An
+update-mode drain then holds one row per key and emitting batch, not just
+the final state; drains that must equal their batch oracle under any split
+reduce it with :func:`latest_update_state` / :func:`latest_update_snapshot`
+(``tools/split_replay_audit.py`` replays every stream query split).
+(With Kafka sources the same pipelines run continuously; nothing below
+depends on batch finiteness.)
 """
 
 from __future__ import annotations

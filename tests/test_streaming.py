@@ -108,6 +108,50 @@ def test_streaming_matches_batch_q4(spark, sf_dir):
     assert batch == stream
 
 
+def test_state_partitions_follow_cores_unless_set(spark, sf_dir):
+    """A registered stateful stream query sizes its state store from the
+    session's cores: each state partition is a task and a set of checkpoint
+    files in every micro-batch, so more partitions than cores is pure fixed
+    cost. A shuffle-partition count set on the session on purpose survives
+    the registry's configure_runtime."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from kafka_streams_playground_spark.plans import REGISTRY
+    from kafka_streams_playground_spark.session import configure_runtime
+
+    class StatePartitions(StreamingQueryListener):
+        def __init__(self):
+            self.counts = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.counts += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    # a new session holds no shuffle-partition value of its own
+    fresh = spark.newSession()
+    listener = StatePartitions()
+    fresh.streams.addListener(listener)
+    try:
+        REGISTRY["stream_q4_products_per_user_10s"].fn(fresh, sf_dir).collect()
+        fresh.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        fresh.streams.removeListener(listener)
+    assert listener.counts
+    assert set(listener.counts) == {fresh.sparkContext.defaultParallelism}
+
+    fresh.conf.set("spark.sql.shuffle.partitions", "3")
+    configure_runtime(fresh)
+    assert fresh.conf.get("spark.sql.shuffle.partitions") == "3"
+
+
 def test_running_count_state_across_microbatches(spark):
     """The custom stateful operator (applyInPandasWithState) must carry its
     per-key counter across micro-batches — the per-record changelog cadence

@@ -115,3 +115,19 @@ def test_split_replay_audit_config_tracks_registry():
     assert set(ORDER_FREE) <= stream_names
     assert set(EXPECTED_DIVERGENT) <= stream_names
     assert len(set(ORDER_FREE)) == len(ORDER_FREE)  # no duplicates
+
+
+def test_ab_compare_refuses_keys_it_cannot_alternate(spark):
+    """An A/B whose arm A cannot be restored, or whose arm B every
+    registered query resets, compares one arm with itself: ab_compare must
+    stop and name the key instead of printing a verdict."""
+    from tools.ab_compare import capture_baseline, check_testable
+
+    with pytest.raises(SystemExit, match="spark.sql.adaptive.enabled"):
+        check_testable({"spark.sql.adaptive.enabled": "false"})
+    with pytest.raises(SystemExit, match="spark.ksp.no.such.key"):
+        capture_baseline(spark, ["spark.ksp.no.such.key"])
+    # shuffle partitions survive configure_runtime, so they can be A/B-tested
+    key = "spark.sql.shuffle.partitions"
+    check_testable({key: "16"})
+    assert capture_baseline(spark, [key]) == {key: spark.conf.get(key)}

@@ -13,7 +13,11 @@ decision mechanical:
   and arm A's (captured baseline values) restored for its runs — only
   runtime-settable SQL confs can be tested (that covers every candidate in
   VERDICT r14 items 3/8: shuffle partitions, AQE coalescing knobs,
-  preferSortMergeJoin, SHJ thresholds).
+  preferSortMergeJoin, SHJ thresholds). The tool refuses a key whose
+  baseline it cannot read (arm A could not be restored) and a key that
+  ``session.configure_runtime`` re-applies on every registered query (arm
+  B would be reset before it ran): either would silently compare one arm
+  with itself.
 * Per query it reports min and median per arm, split by order position,
   plus the decision signal: B beats A on the MIN across alternated reps.
 
@@ -34,6 +38,34 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def check_testable(keys) -> None:
+    """Raise SystemExit for a key that every registered query resets."""
+    from kafka_streams_playground_spark.session import _RUNTIME_CONF
+
+    for k in keys:
+        if k in _RUNTIME_CONF:
+            raise SystemExit(
+                f"{k}: configure_runtime re-applies it on every registered query, "
+                "so arm B would run with arm A's value"
+            )
+
+
+def capture_baseline(spark, keys) -> dict[str, str]:
+    """Arm A: the session's current value of each key. Raise SystemExit for
+    a key with no readable value, which arm A could not restore."""
+    from pyspark.errors import SparkNoSuchElementException
+
+    base = {}
+    for k in keys:
+        try:
+            base[k] = spark.conf.get(k)
+        except SparkNoSuchElementException:
+            base[k] = None
+        if base[k] is None:
+            raise SystemExit(f"{k}: baseline value cannot be read, so arm A cannot be restored")
+    return base
 
 
 def main() -> int:
@@ -72,6 +104,7 @@ def main() -> int:
         raise SystemExit("need at least one --conf k=v (arm B)")
     if not names:
         raise SystemExit("need at least one query (or --top N)")
+    check_testable(confs)
 
     from kafka_streams_playground_spark.plans import REGISTRY
     from kafka_streams_playground_spark.session import get_spark
@@ -79,21 +112,13 @@ def main() -> int:
     spark = get_spark("ab-compare")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Arm A = the session's current values for the tested keys.
-    base: dict[str, str] = {}
-    for k in confs:
-        try:
-            base[k] = spark.conf.get(k)
-        except Exception:
-            base[k] = None  # unset -> restore by unset is not possible; record
-    print(f"arm A (baseline): { {k: base[k] for k in confs} }")
+    base = capture_baseline(spark, confs)
+    print(f"arm A (baseline): {base}")
     print(f"arm B (candidate): {confs}")
 
     def apply(arm: str) -> None:
-        vals = confs if arm == "B" else base
-        for k, v in vals.items():
-            if v is not None:
-                spark.conf.set(k, v)
+        for k, v in (confs if arm == "B" else base).items():
+            spark.conf.set(k, v)
 
     def run_once(name: str) -> float:
         spark.catalog.clearCache()
