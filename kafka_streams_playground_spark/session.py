@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied to any session (including driver-provided)
+# Runtime-settable confs applied to any session (including one a caller built)
 # on every registered query, so a session cannot override them.
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
